@@ -444,7 +444,7 @@ def _throughput_stage(spark, sf: str, cpus: int, n_convs: int | None = None,
 
     from rio_spark.operators.assemble import assemble_documents_salted
     from rio_spark.operators.extract import extract_triples, triples_of
-    from rio_spark.sources.transcripts import conformance_meta, synthetic_transcripts
+    from rio_spark.sources.transcripts import synthetic_docs_meta, synthetic_transcripts
     from rio_spark.testing.corpus import load_corpus
 
     try:
@@ -474,10 +474,7 @@ def _throughput_stage(spark, sf: str, cpus: int, n_convs: int | None = None,
         synthetic_transcripts(spark, n_convs, corpus, conformance_every=1).write.parquet(
             f"{tmp}/transcripts"
         )
-        meta = conformance_meta(n_convs, corpus, conformance_every=1)
-        meta_df = spark.createDataFrame(
-            meta[["conv_id", "format", "base_iri"]].where(meta.notna(), None)
-        )
+        meta_df = synthetic_docs_meta(spark, n_convs, corpus, conformance_every=1)
 
         transcripts = spark.read.parquet(f"{tmp}/transcripts")
         n_turns = transcripts.count()  # warm the page cache; count separately

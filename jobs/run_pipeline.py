@@ -54,11 +54,13 @@ def main() -> None:
     from rio_spark.operators.materialize import GraphStore
     from rio_spark.pipeline import run_pipeline
     from rio_spark.sources.entity_dictionary import entity_dictionary
-    from rio_spark.sources.transcripts import synthetic_transcripts
+    from rio_spark.sources.transcripts import synthetic_docs_meta, synthetic_transcripts
 
     spark = get_spark(app_name="rio_spark_pipeline", cores=args.cores)
+    docs_meta = None
     if args.synthetic_convs:
         transcripts = synthetic_transcripts(spark, args.synthetic_convs)
+        docs_meta = synthetic_docs_meta(spark, args.synthetic_convs)
     elif args.transcripts:
         transcripts = spark.read.parquet(args.transcripts)
     else:
@@ -70,6 +72,7 @@ def main() -> None:
         transcripts,
         store,
         args.snapshot_id,
+        docs_meta=docs_meta,
         dictionary=entity_dictionary(spark),
         n_groups=args.n_groups,
     )

@@ -54,7 +54,7 @@ def main() -> None:
     from rio_spark.sources.entity_dictionary import entity_dictionary
     from rio_spark.sources.transcripts import (
         TRANSCRIPT_SCHEMA,
-        conformance_meta,
+        synthetic_docs_meta,
         synthetic_transcripts,
     )
     from rio_spark.streaming.materialize import run_streaming_pipeline
@@ -63,11 +63,7 @@ def main() -> None:
 
     docs_meta = None
     if args.synthetic_convs:
-        meta = conformance_meta(args.synthetic_convs, None)
-        docs_meta = spark.createDataFrame(
-            meta[["conv_id", "format", "base_iri"]].where(meta.notna(), None)
-        )
-    if args.synthetic_convs:
+        docs_meta = synthetic_docs_meta(spark, args.synthetic_convs)
         # parameters in the dir name: changing --synthetic-convs/--files must
         # not silently reuse a stale landing set
         input_dir = os.path.join(

@@ -14,11 +14,11 @@ filters into the scan.
 Scale notes (100 TB triple store):
 
 * Constant-PREDICATE patterns are the overwhelmingly common shape; on a
-  predicate-partitioned / bucketed store (operators/bucketing.py) they
-  prune to one partition before any shuffle.
+  predicate-partitioned store they prune to one partition before any
+  shuffle.
 * Star joins (patterns sharing the subject variable) all shuffle on the
   same key, so a subject-bucketed layout runs the whole star without an
-  exchange (plan-asserted for bucketed joins in tests/test_plan_shapes.py).
+  exchange.
 * Patterns with NO shared variable with the accumulated join would be a
   cartesian product; this evaluator raises instead (reorder the BGP, or
   compute products explicitly if you really mean them).

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rio_spark.operators.materialize import GraphStore
 
-_APPEND_OPS = {"merge", "bootstrap", "init", "compact", "rebucket"}  # additive or content-neutral
+_APPEND_OPS = {"merge", "init", "compact", "rebucket"}  # additive or content-neutral
 
 
 class IncrementalCountView:

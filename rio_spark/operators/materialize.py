@@ -108,14 +108,11 @@ class GraphStore:
         Resolution order: the CURRENT manifest's ``n_buckets`` stamp (so
         :meth:`rebucket`'s spec change rides the same atomic CURRENT flip
         as its file swap — no window where spec and layout disagree), then
-        the ``SPEC`` file (published durably by the first commit), then
-        the constructor argument."""
+        the constructor argument (only while no snapshot is committed, i.e.
+        the store is empty)."""
         cur = self.current_snapshot()
         if cur is not None:
-            return self._spec_of(self._read_manifest(cur))
-        p = self.manifests_dir / "SPEC"
-        if p.exists():
-            return int(json.loads(p.read_text())["n_buckets"])
+            return self._read_manifest(cur)["n_buckets"]
         return self._ctor_n_buckets
 
     # -- snapshot metadata ----------------------------------------------------
@@ -154,19 +151,6 @@ class GraphStore:
             self._manifest_cache[n] = m
         return m
 
-    def _spec_of(self, manifest: dict) -> int:
-        """The bucket modulus a manifest's FILES are laid out under: its
-        own stamp, else the original SPEC file (every unstamped manifest
-        predates rebucket, and only rebucket ever changes the spec), else
-        the constructor value."""
-        stamped = manifest.get("n_buckets")
-        if stamped is not None:
-            return int(stamped)
-        p = self.manifests_dir / "SPEC"
-        if p.exists():
-            return int(json.loads(p.read_text())["n_buckets"])
-        return self._ctor_n_buckets
-
     def _list_data_files(self) -> set[str]:
         """All parquet parts on disk, as graph_dir-relative paths."""
         root = Path(self.graph_dir)
@@ -182,27 +166,11 @@ class GraphStore:
 
     def _live_files(self, snapshot: int | None = None) -> list[str]:
         """graph_dir-relative data files of ``snapshot`` (default: CURRENT).
-        Legacy stores (data on disk, NO ``_manifests`` dir at all) fall back
-        to the disk listing — a pure read; the first write commits a
-        bootstrap manifest.  Once ``_manifests`` exists, the disk listing is
-        never trusted: a missing/un-flipped CURRENT means no snapshot was
+        The disk listing is never trusted: no CURRENT means no snapshot was
         ever committed, so the store reads as empty (on-disk files are
         orphans of a crashed write, possibly torn)."""
         n = self.current_snapshot() if snapshot is None else snapshot
         if n is None:
-            if snapshot is None and not self.manifests_dir.exists():
-                # legacy store: refuse to serve a PARTIAL bucket set — a
-                # pre-manifest compaction that crashed mid-swap leaves
-                # .compacting/.old staging dirs whose content the plain disk
-                # listing would silently drop (r5 ADVICE).  Recovery is a
-                # write-path concern; reads stay pure and fail loudly.
-                if self._legacy_swap_dirs():
-                    raise RuntimeError(
-                        f"legacy store at {self.graph_dir} has interrupted-"
-                        "compaction staging dirs (*.compacting/*.old); run "
-                        "migrate_legacy() (or any write) to recover before reading"
-                    )
-                return sorted(self._list_data_files())  # legacy store
             return []
         return self._read_manifest(n)["files"]
 
@@ -231,12 +199,6 @@ class GraphStore:
                     "retry the operation"
                 )
         self.manifests_dir.mkdir(parents=True, exist_ok=True)
-        spec = self.manifests_dir / "SPEC"
-        if not spec.exists():
-            # freeze the bucket spec with the first commit: every later
-            # writer buckets with THIS modulus regardless of what its
-            # constructor was told (see the n_buckets property)
-            self._durable_write(spec, json.dumps({"n_buckets": self.n_buckets}))
         nums = [
             int(_MANIFEST_RE.match(p.name).group(1))
             for p in self.manifests_dir.iterdir()
@@ -251,15 +213,16 @@ class GraphStore:
             "n_files": len(files),
             "committed_at": time.time(),
             # every snapshot records the spec its files are bucketed with
-            # (Iceberg: snapshot -> partition-spec reference); rebucket is
-            # the one op that passes a NEW value
+            # (Iceberg: snapshot -> partition-spec reference), which freezes
+            # the spec from the first commit on; rebucket and rollback are
+            # the ops that pass a value of their own
             "n_buckets": self.n_buckets if n_buckets is None else n_buckets,
         }
         if bounds is not None:
             # per-file [min, max] subject bounds (Iceberg manifest column
             # bounds): lets merge skip files whose range cannot contain a
-            # batch subject. Absent for files whose stats weren't captured
-            # (legacy/bootstrap) — skipping degrades gracefully to
+            # batch subject. Absent for files whose footer had no usable
+            # stats (see _file_bounds) — skipping degrades gracefully to
             # bucket-level pruning for those.
             manifest["bounds"] = {f: bounds[f] for f in files if f in bounds}
         # durable-before-visible (r5 ADVICE): the manifest must be ON DISK —
@@ -269,8 +232,8 @@ class GraphStore:
         # already safe; this closes the power-loss window too.
         self._durable_write(self.manifests_dir / f"manifest-{n}.json", json.dumps(manifest))
         # a freshly-written number must never serve a stale cache entry:
-        # manifest numbering restarts at 0 when a devolved legacy store
-        # re-bootstraps under a live handle
+        # manifest numbering restarts at 0 when ``_manifests`` is wiped
+        # under a live handle
         self._manifest_cache.pop(n, None)
         self._durable_write(self.manifests_dir / "CURRENT", str(n))  # the atomic commit
         return n
@@ -292,67 +255,15 @@ class GraphStore:
         finally:
             os.close(dfd)
 
-    def _bootstrap_if_legacy(self) -> None:
-        """Writer-path entry hook, two jobs:
-
-        * NEW store (no ``_manifests`` dir, no data): commit an EMPTY
-          snapshot 0 BEFORE the first data write.  This is what makes the
-          crashed-first-merge window safe: once the init manifest exists,
-          data files on disk that no manifest references are always
-          orphans of a crashed write (possibly torn parquet) and stay
-          invisible — they are never mistaken for a legacy store's content.
-        * LEGACY store (data files but no ``_manifests`` dir — written by
-          the pre-manifest format): finish any rename-swap the OLD
-          compact() may have left mid-crash (``p_bucket=N.compacting`` /
-          ``.old`` staging dirs — promote a complete rewrite whose live
-          dir is gone, drop stale staging/old next to a live dir), then
-          commit the on-disk file set as snapshot 0.
-        """
-        if self.manifests_dir.exists():
-            return
-        if self._list_data_files() or self._legacy_swap_dirs():
-            self._recover_legacy_swap_dirs()
-            self._commit(self._list_data_files(), "bootstrap")
-        else:
+    def _init_if_new(self) -> None:
+        """Writer-path entry hook: a NEW store (no ``_manifests`` dir)
+        commits an EMPTY snapshot 0 BEFORE the first data write.  This is
+        what makes the crashed-first-merge window safe: once the init
+        manifest exists, data files on disk that no manifest references are
+        always orphans of a crashed write (possibly torn parquet) and stay
+        invisible."""
+        if not self.manifests_dir.exists():
             self._commit(set(), "init")
-
-    def migrate_legacy(self) -> None:
-        """Explicit migration entry point for read-only consumers of a
-        pre-manifest store (the read path refuses stores with interrupted-
-        compaction staging dirs rather than serve a partial bucket set)."""
-        self._bootstrap_if_legacy()
-
-    def _legacy_swap_dirs(self) -> list[Path]:
-        root = Path(self.graph_dir)
-        if not root.exists():
-            return []
-        return [
-            d for d in root.iterdir()
-            if d.name.endswith((".compacting", ".old")) and d.is_dir()
-        ]
-
-    def _recover_legacy_swap_dirs(self) -> None:
-        """Migration-only recovery for the pre-manifest format's atomic-
-        rename compaction (the new format never creates these dirs):
-        staging next to a live dir is stale (drop); staging without a live
-        dir is a complete rewrite that crashed between renames (promote);
-        ``.old`` without a live dir is the originals mid-rollback (restore);
-        ``.old`` next to a live dir is post-swap leftovers (drop)."""
-        import shutil
-
-        root = Path(self.graph_dir)
-        for staging in sorted(root.glob("p_bucket=*.compacting")):
-            live = staging.with_name(staging.name[: -len(".compacting")])
-            if live.exists():
-                shutil.rmtree(staging)
-            else:
-                staging.rename(live)
-        for old in sorted(root.glob("p_bucket=*.old")):
-            live = old.with_name(old.name[: -len(".old")])
-            if live.exists():
-                shutil.rmtree(old)
-            else:
-                old.rename(live)
 
     # -- reads (pure: never mutate the store) ---------------------------------
 
@@ -398,11 +309,11 @@ class GraphStore:
         live = self._live_files(n)
         if not live:
             return self._read_files(spark, [])
-        m = self._read_manifest(n) if n is not None else {}
+        m = self._read_manifest(n)
         known_bounds = m.get("bounds", {})
         # the PINNED manifest's layout spec, never the current one: time
         # travel across a rebucket must hash with the old modulus
-        spec = self._spec_of(m) if m else self.n_buckets
+        spec = m["n_buckets"]
         per_bucket: dict[str, tuple[str, str]] = {}
         rows = spark.createDataFrame(
             [(s,) for s in subjects], "subject string"
@@ -560,7 +471,7 @@ class GraphStore:
         # under, or later merges/lookups hash into buckets that don't exist
         return self._commit(set(target["files"]), "rollback", expect_parent=base,
                             bounds=target.get("bounds", {}),
-                            n_buckets=self._spec_of(target))
+                            n_buckets=target["n_buckets"])
 
     def added_quads(
         self, spark: SparkSession, since: int, until: int | None = None
@@ -628,7 +539,7 @@ class GraphStore:
             if not (since < n <= until):
                 continue
             s = by_n[n]
-            if s["op"] not in ("merge", "bootstrap"):
+            if s["op"] != "merge":
                 continue
             parent = s["parent"]
             if parent is None:
@@ -664,6 +575,14 @@ class GraphStore:
             "subject", "predicate", "object", "graph",
             F.pmod(F.xxhash64("subject"), F.lit(self.n_buckets)).cast("int").alias("p_bucket"),
         )
+
+    def _append(self, df: DataFrame) -> set[str]:
+        """Append ``df`` under ``graph_dir`` partitioned by ``p_bucket`` and
+        return the data files the write added (disk listing before/after).
+        The files stay invisible until a manifest commit names them."""
+        before = self._list_data_files()
+        df.write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)
+        return self._list_data_files() - before
 
     def _file_bounds(self, files) -> dict[str, list]:
         """[min, max] of the ``subject`` column per file, read from parquet
@@ -724,7 +643,7 @@ class GraphStore:
         size. The append + manifest flip is the Iceberg commit: a crash
         anywhere leaves the previous snapshot live and at most orphan
         files for expiry."""
-        self._bootstrap_if_legacy()
+        self._init_if_new()
         batch = self._bucketed(triples).dropDuplicates(
             ["subject", "predicate", "object", "graph"]
         )
@@ -768,9 +687,7 @@ class GraphStore:
         new_rows = new_rows.cache()
         n = new_rows.count()
         if n:
-            before = self._list_data_files()
-            new_rows.write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)
-            added = self._list_data_files() - before
+            added = self._append(new_rows)
             self._commit(
                 set(live) | added, "merge", expect_parent=base,
                 bounds={**known_bounds, **self._file_bounds(added)},
@@ -812,7 +729,7 @@ class GraphStore:
         import math
         from collections import defaultdict
 
-        self._bootstrap_if_legacy()
+        self._init_if_new()
         base = self.current_snapshot()
         live = self._live_files(base)
         bounds = dict(
@@ -831,11 +748,7 @@ class GraphStore:
             df = self._read_files(spark, bfiles)
             n = df.count()
             n_out = max(1, math.ceil(n / target_rows_per_file))
-            before = self._list_data_files()
-            df.repartition(n_out).write.mode("append").partitionBy(
-                "p_bucket"
-            ).parquet(self.graph_dir)
-            added = self._list_data_files() - before
+            added = self._append(df.repartition(n_out))
             files = (files - set(bfiles)) | added
             for f in bfiles:
                 bounds.pop(f, None)
@@ -862,20 +775,18 @@ class GraphStore:
         a read path with no mixed-spec planning."""
         if new_n_buckets < 1:
             raise ValueError("new_n_buckets must be >= 1")
-        self._bootstrap_if_legacy()
+        self._init_if_new()
         base = self.current_snapshot()
         if new_n_buckets == self.n_buckets:
             return base
         live = self._live_files(base)
-        before = self._list_data_files()
+        added: set[str] = set()
         if live:
-            df = self._read_files(spark, live).select(
+            added = self._append(self._read_files(spark, live).select(
                 "subject", "predicate", "object", "graph",
                 F.pmod(F.xxhash64("subject"), F.lit(new_n_buckets))
                 .cast("int").alias("p_bucket"),
-            )
-            df.write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)
-        added = self._list_data_files() - before
+            ))
         return self._commit(
             added, "rebucket", expect_parent=base,
             bounds=self._file_bounds(added), n_buckets=new_n_buckets,
@@ -900,7 +811,7 @@ class GraphStore:
         erasure: the deleted quads remain readable via time travel until
         ``expire_snapshots`` drops every snapshot that references the old
         files — true physical erasure is delete_where + expiry."""
-        self._bootstrap_if_legacy()
+        self._init_if_new()
         base = self.current_snapshot()
         live = self._live_files(base)
         if not live:
@@ -942,12 +853,7 @@ class GraphStore:
         )
         n_before = self._read_files(spark, touched).count()
         n_after = kept_rows.count()
-        before_disk = self._list_data_files()
-        if n_after:
-            kept_rows.write.mode("append").partitionBy("p_bucket").parquet(
-                self.graph_dir
-            )
-        added = self._list_data_files() - before_disk
+        added = self._append(kept_rows) if n_after else set()
         bounds = dict(
             self._read_manifest(base).get("bounds", {}) if base is not None else {}
         )

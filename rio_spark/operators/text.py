@@ -525,7 +525,14 @@ def corpus_mix_report(
     broadcast join for the share denominator; nothing here materializes
     per-token state, so the report costs ~one scan at any corpus size.
     ``q_bucket`` = least(floor(quality * bins), bins-1) — identical float
-    arithmetic on both engines given the scorers' rounded quality."""
+    arithmetic on both engines given the scorers' rounded quality.
+
+    Cache lifetime: the tiny per-(lang, band) aggregate is ``.cache()``d
+    because both the share denominator and the returned plan consume it;
+    the RETURNED DataFrame reads that cache, so the caller owns
+    ``unpersist`` — call ``spark.catalog.clearCache()`` (or unpersist via
+    the plan) after the last action if running many reports in one
+    long-lived session."""
     # the scorers alias their id output to "doc_id" regardless of input —
     # normalize here so any (id_col, text_col) works
     docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))

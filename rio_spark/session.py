@@ -14,13 +14,27 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """``RIO_SPARK_DRIVER_MEM``, else 40% of physical memory capped at 16g:
+    a fixed heap larger than the host cannot even be mapped, and the rest
+    of memory serves the Python workers and the page cache."""
+    mem = os.environ.get("RIO_SPARK_DRIVER_MEM")
+    if mem:
+        return mem
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, phys_mb * 2 // 5)}m"
+
+
 def get_spark(
     app_name: str = "rio_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(
+        os.sched_getaffinity(0)
+    )
+    driver_mem = _driver_mem()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -40,16 +54,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # local mode = driver-only: the heap serves all executor threads.
         # FIXED-size heap (Xms=Xmx): heap growth means host page-allocation
-        # churn (this sandbox is a microVM where page faults are costly) and
-        # produced 2-8x run-to-run variance at 32 cores; a pre-sized 16g heap
-        # is stable and fast. Undersized (8g) throttles wide runs via GC.
-        .config("spark.driver.memory", os.environ.get("RIO_SPARK_DRIVER_MEM", "16g"))
+        # churn (page faults are costly in a microVM) and produced 2-8x
+        # run-to-run variance at 32 cores; a pre-sized 16g heap is stable
+        # and fast there. Undersized (8g) throttles wide runs via GC.
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Djava.io.tmpdir=/tmp -Xms"
-            + os.environ.get("RIO_SPARK_DRIVER_MEM", "16g"),
-        )
+        .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp -Xms" + driver_mem)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

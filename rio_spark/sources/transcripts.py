@@ -172,3 +172,20 @@ def conformance_meta(
     return pd.DataFrame(
         [conv_meta(i, corpus, conformance_every)[0] for i in range(n_convs)]
     )
+
+
+def synthetic_docs_meta(
+    spark,
+    n_convs: int,
+    corpus: list[ConformanceDoc] | None = None,
+    conformance_every: int = 10,
+):
+    """``run_pipeline``'s ``docs_meta`` side input for the synthetic convs
+    0..n: ``(conv_id, format, base_iri)``, null format for free-text convs.
+    Without it every document reads as free text and nothing is parsed."""
+    meta = conformance_meta(n_convs, corpus, conformance_every)[
+        ["conv_id", "format", "base_iri"]
+    ].astype(object)
+    return spark.createDataFrame(
+        meta.where(meta.notna(), None), "conv_id string, format string, base_iri string"
+    )

@@ -5,5 +5,5 @@ import pytest
 def spark():
     from rio_spark.session import get_spark
 
-    s = get_spark(app_name="rio_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="rio_spark_tests", shuffle_partitions=8)
     yield s

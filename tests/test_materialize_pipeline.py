@@ -266,76 +266,6 @@ def test_snapshot_isolation_and_time_travel(spark, tmp_path):
     assert store.graph(spark).count() == 60
 
 
-def _devolved_legacy_store(spark, tmp_path):
-    """Build a 3-merge store, then devolve it to the pre-manifest layout
-    crashed mid-compaction by the OLD code (complete rewrite staged in
-    p_bucket=0.compacting, live dir renamed away; stale .old leftover)."""
-    import shutil
-    from pathlib import Path
-
-    from rio_spark.operators.materialize import GraphStore
-
-    store = GraphStore(str(tmp_path / "store"), n_buckets=2)
-    for i in range(3):
-        store.merge(spark, spark.createDataFrame(
-            [(f"<http://e/s{i}_{j}>", "<http://p/x>", f'"{j}"', None) for j in range(10)],
-            "subject string, predicate string, object string, graph string",
-        ))
-    expected = sorted(map(tuple, store.graph(spark).select(
-        "subject", "predicate", "object").collect()))
-
-    shutil.rmtree(store.manifests_dir)
-    root = Path(store.graph_dir)
-    (root / "p_bucket=0").rename(root / "p_bucket=0.compacting")
-    (root / "p_bucket=1.old").mkdir()             # post-swap leftover
-    return store, root, expected
-
-
-def test_legacy_read_refuses_staged_swap_then_migrates(spark, tmp_path):
-    """Pure reads must NOT silently serve a partial bucket set from a
-    legacy store with interrupted-compaction staging dirs (r5 advice):
-    they fail loudly; migrate_legacy() is the read-only consumer's
-    recovery entry point and loses nothing."""
-    import pytest
-
-    store, root, expected = _devolved_legacy_store(spark, tmp_path)
-
-    with pytest.raises(RuntimeError, match="migrate_legacy"):
-        store.graph(spark).count()
-    # the refusing read stayed pure: staging dirs untouched
-    assert (root / "p_bucket=0.compacting").exists()
-    assert (root / "p_bucket=1.old").exists()
-
-    store.migrate_legacy()
-    assert (root / "p_bucket=0").exists()
-    assert not (root / "p_bucket=0.compacting").exists()
-    assert not (root / "p_bucket=1.old").exists()
-    got = sorted(map(tuple, store.graph(spark).select(
-        "subject", "predicate", "object").collect()))
-    assert got == expected
-    assert [s["op"] for s in store.snapshots()] == ["bootstrap"]
-
-
-def test_legacy_store_migration_recovers_old_swap_dirs(spark, tmp_path):
-    """The first WRITE on the new format must promote the staging dir,
-    bootstrap the file set as a snapshot, and lose nothing — no explicit
-    migrate_legacy() call needed on the write path."""
-    store, root, expected = _devolved_legacy_store(spark, tmp_path)
-
-    assert store.merge(spark, spark.createDataFrame(
-        [("<http://e/new>", "<http://p/x>", '"n"', None)],
-        "subject string, predicate string, object string, graph string",
-    )) == 1
-    assert (root / "p_bucket=0").exists()
-    assert not (root / "p_bucket=0.compacting").exists()
-    assert not (root / "p_bucket=1.old").exists()
-    got = sorted(map(tuple, store.graph(spark).select(
-        "subject", "predicate", "object").collect()))
-    assert got == sorted(expected + [("<http://e/new>", "<http://p/x>", '"n"')])
-    ops = [s["op"] for s in store.snapshots()]
-    assert ops[0] == "bootstrap" and ops[-1] == "merge"
-
-
 def test_snapshots_df_metadata_table(spark, tmp_path):
     """snapshots_df is the store's Iceberg-style metadata table: one row per
     manifest with op lineage, file deltas vs the parent, byte footprint of
@@ -519,6 +449,29 @@ def test_store_maintenance_cli(spark, tmp_path, monkeypatch, capsys):
     assert run("expire", "--store", root, "--keep-last", "1")["data_files_deleted"] > 0
 
 
+def test_pipeline_cli_extracts_rdf(spark, tmp_path, monkeypatch, capsys):
+    """The batch CLI feeds the synthetic convs' format metadata to the
+    pipeline: RDF documents are parsed (error rows from the corrupt convs,
+    RDF-derived quads in the store), not all read as free text."""
+    import json as _json
+
+    from jobs.run_pipeline import main as pipeline_main
+    from rio_spark.operators.linking import KG_LABEL, KG_MENTIONS
+
+    root = str(tmp_path / "store")
+    monkeypatch.setattr("sys.argv", [
+        "run_pipeline.py", "--synthetic-convs", "40", "--store", root,
+        "--n-groups", "1", "--n-buckets", "4",
+    ])
+    pipeline_main()
+    report = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["groups_committed"] == 1 and report["triples_merged"] > 0
+    assert report["error_rows"] > 0
+    quads = GraphStore(root).graph(spark)
+    assert quads.filter(~F.col("predicate").isin(KG_MENTIONS, KG_LABEL)).count() > 0
+    assert quads.filter(F.col("predicate") == KG_MENTIONS).count() > 0
+
+
 def test_tags_pin_snapshots_through_expiry(spark, tmp_path):
     """Tags are named, expiry-protected snapshot refs: graph(tag=) reads
     the pinned version, expire keeps a tagged snapshot and all its files
@@ -650,39 +603,6 @@ def test_merge_skips_files_via_manifest_subject_bounds(spark, tmp_path, monkeypa
     store.rollback(store.current_snapshot() - 1)
     m3 = store._read_manifest(store.current_snapshot())
     assert m3["op"] == "rollback" and set(m3["bounds"]) == set(m3["files"])
-
-
-def test_merge_into_pre_bounds_manifest_scans_all(spark, tmp_path):
-    """Backward compat: a manifest written before subject bounds existed
-    (no "bounds" key) degrades to bucket-level pruning — every live file
-    of the touched buckets is scanned and dedup stays exact."""
-    import json as _json
-
-    from rio_spark.operators.materialize import GraphStore
-
-    store = GraphStore(str(tmp_path / "store"), n_buckets=1)
-    store.merge(spark, spark.createDataFrame(
-        [("<http://aaa/s0>", "<http://p/x>", '"0"', None)],
-        "subject string, predicate string, object string, graph string",
-    ))
-    # strip the bounds key in place, as an old-format store would look
-    n = store.current_snapshot()
-    p = store.manifests_dir / f"manifest-{n}.json"
-    m = _json.loads(p.read_text())
-    del m["bounds"]
-    p.write_text(_json.dumps(m))
-
-    dup_and_new = spark.createDataFrame(
-        [("<http://aaa/s0>", "<http://p/x>", '"0"', None),
-         ("<http://zzz/s9>", "<http://p/x>", '"9"', None)],
-        "subject string, predicate string, object string, graph string",
-    )
-    assert store.merge(spark, dup_and_new) == 1  # dedup exact without bounds
-    assert store.graph(spark).count() == 2
-    # the new commit records bounds for files it added; the old file stays
-    # unbounded (absent from the dict) and is simply always scanned
-    m2 = store._read_manifest(store.current_snapshot())
-    assert set(m2["bounds"]) < set(m2["files"])
 
 
 def test_delete_where_copy_on_write(spark, tmp_path):

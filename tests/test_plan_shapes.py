@@ -21,6 +21,23 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def plan_nodes(plan, cached: list) -> list[str]:
+    """Class names of a physical plan's nodes, depth first, walked through
+    AQE wrappers.  The plan under each InMemoryTableScanExec is walked
+    separately and appended to ``cached`` (one list per cached reader)
+    instead of being counted in the result."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return plan_nodes(plan.executedPlan(), cached)
+    out = [name]
+    if name == "InMemoryTableScanExec":
+        cached.append(plan_nodes(plan.relation().cachedPlan(), cached))
+    children = plan.children()
+    for i in range(children.size()):
+        out += plan_nodes(children.apply(i), cached)
+    return out
+
+
 def test_entity_linking_is_broadcast_equijoin(spark):
     plan = plan_of(q_kg_entity_linking(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
@@ -136,10 +153,11 @@ def test_decontaminate_broadcasts_benchmark_side(spark):
 def test_corpus_mix_single_aggregate_plus_broadcast_total(spark):
     from rio_spark.plans.catalog import q_corpus_mix
 
-    # hermetic: a prior test's materialized cache of the same subtree
-    # changes how the InMemoryRelation prints (and thus the scan counts)
+    # hermetic: a prior test's cache of the same subtree must not stand in
+    # for this query's own
     spark.catalog.clearCache()
-    plan = plan_of(q_corpus_mix(spark, SF_DIR))
+    df = q_corpus_mix(spark, SF_DIR)
+    plan = plan_of(df)
     # r7: the three scorers chain through passthrough into ONE fused corpus
     # pass — no scorer joins at all; the only join left is the share
     # denominator, a 1-ROW broadcast (Catalyst folds the constant `__k` key
@@ -150,12 +168,14 @@ def test_corpus_mix_single_aggregate_plus_broadcast_total(spark):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
-    # the corpus pass computes ONCE: every parquet scan in the plan text
-    # sits under the cached `per` relation (each InMemoryTableScan prints
-    # the relation's subtree, so textual scan mentions == cached readers);
+    # the corpus pass computes ONCE: no parquet scan outside the cached
+    # `per` relation, and one scan at most inside each cached reader's plan;
     # the former join formulation had 3 independent corpus scans per branch
-    assert plan.count("InMemoryTableScan") >= 1
-    assert plan.count("Scan parquet") <= plan.count("InMemoryTableScan")
+    cached: list = []
+    top = plan_nodes(df._jdf.queryExecution().executedPlan(), cached)
+    assert top.count("InMemoryTableScanExec") >= 1
+    assert "FileSourceScanExec" not in top
+    assert all(c.count("FileSourceScanExec") <= 1 for c in cached)
     # leave no cache registration behind for later tests either
     spark.catalog.clearCache()
 
